@@ -920,9 +920,11 @@ object SparkEntryExt {
       }.reduce(_.unionByName(_)).distinct()
     // Semi-join direction is approx-against-exact (the reverse of
     // recallAtK's exact-against-approx); the hit COUNTS are equal only
-    // because knnJoin's row_number guarantees distinct (query_id,
-    // point_id) on the exact side — if the exact path ever keeps ties,
-    // this tail must .distinct() the exact projection too.
+    // because the exact side has distinct (query_id, point_id): knnJoin
+    // returns each point row at most once per query, with distinct
+    // ranks 1..k, and point ids are unique here — if the exact path
+    // ever keeps ties, this tail must .distinct() the exact projection
+    // too.
     val hitCounts = tagged
       .join(exact, Seq("query_id", "point_id"), "left_semi")
       .groupBy(col("method")).agg(count(lit(1)).as("__hits"))

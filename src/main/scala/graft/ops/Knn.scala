@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg
+
 /** Exact top-k vector search — the reference's retrieval core.
   *
   *  - V4 single-query top-k: `Qdrant/VectorDB/Database.py:22-28`
@@ -11,11 +13,11 @@ import org.apache.spark.sql.functions._
   *    `TakeOrderedAndProject` (partial per-partition top-k, no full sort).
   *  - V5 batch top-k: the reference's sequential per-row loop
   *    (`Qdrant/llm.py:93` calling `:20`) is semantically a k-NN JOIN —
-  *    here one declarative plan: broadcast the (small) query side, score,
-  *    and take `row_number() <= k` per query. Spark ≥3.5 rewrites the
-  *    rank-limit window to `WindowGroupLimit`, i.e. a map-side partial
-  *    top-k before the shuffle — per-query state is k rows, never the
-  *    full candidate set.
+  *    here one plan: broadcast the (small) query side, score, and keep
+  *    the k best per query with the bounded top-k aggregate
+  *    ([[graft.functions.TopKAgg]]), partial per task before the
+  *    `query_id` shuffle — per-query state is k rows, never the full
+  *    candidate set, and no pair is sorted.
   *
   * Determinism (V6): Qdrant's tie order is undefined; we strengthen to a
   * total order `(score DESC, point_id ASC)` so results are
@@ -37,7 +39,8 @@ object Knn {
       .limit(k)
 
   /** V5: k-NN join. `queries` must be the small side (it is broadcast).
-    * Output: all query columns + point id + `rank` (1..k) + `score`.
+    * Output: all point columns, `query_id`, `score`, `rank` (INT 1..k,
+    * distinct per query, ordered by `(score DESC, point id ASC)`).
     */
   def knnJoin(
       queries: DataFrame,
@@ -61,11 +64,23 @@ object Knn {
     val scored = points
       .crossJoin(q)
       .withColumn("score", scoreExpr)
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
+    topKPerQuery(scored, col(pointIdCol), points.columns.toSeq, k)
+  }
+
+  /** The `k` rows of `scored` with the best `(score DESC, id ASC)` per
+    * `query_id`, one row per hit: `cols`, `query_id`, `score` and
+    * `rank` (INT 1..k). Only `cols` and `score` travel to the shuffle.
+    */
+  private def topKPerQuery(scored: DataFrame, id: Column, cols: Seq[String],
+      k: Int): DataFrame = {
+    def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
+    val hit = struct((cols :+ "score").map(quoted): _*)
     scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .drop("__qvec")
+      .groupBy(col("query_id"))
+      .agg(TopKAgg.topK(col("score"), id, hit, k).as("__hits"))
+      .select(col("query_id"), posexplode(col("__hits")).as(Seq("__pos", "__hit")))
+      .select(cols.map(c => col("__hit").getField(c).as(c)) ++ Seq(col("query_id"),
+        col("__hit").getField("score").as("score"), (col("__pos") + 1).as("rank")): _*)
   }
 
   /** Filtered k-NN: Qdrant's filtered search (`search(..., query_filter=…)`)
@@ -204,10 +219,10 @@ object Knn {
     * `k` HIGHEST-scoring points whose label differs from the anchor's
     * — the close-but-wrong examples an embedding model learns the most
     * from (random negatives are trivially separable; the hardest ones
-    * define the decision boundary). Same broadcast + WindowGroupLimit
-    * shape as [[knnJoin]], with the label inequality as a join-side
-    * filter: per-anchor state stays k rows, and at 100 TB the corpus
-    * side still never moves. Label here is any supervision proxy —
+    * define the decision boundary). Same broadcast + bounded top-k
+    * aggregate shape as [[knnJoin]], with the label inequality as a
+    * join-side filter: per-anchor state stays k rows, and at 100 TB the
+    * corpus side still never moves. Label here is any supervision proxy —
     * class, source, or a dedup cluster id (mining negatives OUTSIDE
     * the anchor's near-dup cluster avoids training on false
     * negatives that are really unlabeled positives).
@@ -227,15 +242,15 @@ object Knn {
       col(anchorIdCol).as("query_id"),
       col(anchorVecCol).as("__qvec"),
       col(anchorLabelCol).as("__qlabel")))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col(pointIdCol).asc)
-    points
+    val scored = points
       .crossJoin(a)
       .filter(col(pointLabelCol) =!= col("__qlabel"))
-      .withColumn("score", VectorOps.cosine(col("__qvec"), col(pointVecCol)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(pointIdCol).as("point_id"),
-        col("score"), col(pointLabelCol).as("neg_label"))
+      .select(col("query_id"), col(pointIdCol).as("point_id"),
+        col(pointLabelCol).as("neg_label"),
+        VectorOps.cosine(col("__qvec"), col(pointVecCol)).as("score"))
+    topKPerQuery(scored, col("point_id"), Seq("point_id", "neg_label"), k)
+      .select(col("query_id"), col("rank").cast("long"), col("point_id"),
+        col("score"), col("neg_label"))
   }
 
   /** Radius search: every point scoring at least `threshold` for each
@@ -243,9 +258,9 @@ object Knn {
     * `score_threshold`; "all sufficiently similar", not "the k most
     * similar"). Same broadcast discipline as [[knnJoin]], but CHEAPER
     * at scale: a pure threshold needs no per-query ranking state at
-    * all, so the whole operator is one scan-side filter — no window,
-    * no WindowGroupLimit, no exchange; output order is imposed only by
-    * the caller.
+    * all, so the whole operator is one scan-side filter — no top-k
+    * aggregate, no exchange; output order is imposed only by the
+    * caller.
     */
   def rangeSearch(
       queries: DataFrame,

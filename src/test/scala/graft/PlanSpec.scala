@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{ExplainMode, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
 /** Physical-plan shape assertions: the scale-critical plan properties
   * SCALING.md claims (filter pushdown, column pruning, broadcast joins,
-  * window-group-limit top-k) are pinned here so a refactor that
+  * pre-shuffle top-k) are pinned here so a refactor that
   * silently loses one fails the suite, not the 100 TB run.
   */
 class PlanSpec extends SparkSpec {
@@ -26,16 +31,36 @@ class PlanSpec extends SparkSpec {
       s"unprojected column still read (pruning lost):\n$plan")
   }
 
-  test("kNN join broadcasts the query side and plans a WindowGroupLimit top-k") {
+  test("kNN join broadcasts the query side and takes top-k as a partial aggregate, no sort") {
     val emb = Tables.embeddings(spark, sf0001)
     val queries = emb.filter(col("vec_id") < 10)
     val points = emb.filter(col("vec_id") >= 10).withColumnRenamed("vec_id", "point_id")
-    val plan = formatted(
-      Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5))
+    val df = Knn.knnJoin(queries, points, "vec_id", "embedding", "point_id", "embedding", 5)
+    val plan = formatted(df)
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"query side not broadcast — the crossJoin would shuffle N×Q at scale:\n$plan")
-    assert(plan.contains("WindowGroupLimit"),
-      s"rank<=k not rewritten to WindowGroupLimit (partial top-k before shuffle):\n$plan")
+    // the initial AQE plan, exchanges included
+    val phys = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val sorts = phys.collect {
+      case p @ (_: SortExec | _: WindowExec | _: WindowGroupLimitExec) => p.nodeName
+    }
+    assert(sorts.isEmpty, s"top-k must not sort the scored pairs, found $sorts:\n$plan")
+    // k rows per (task, query) cross the shuffle: the top-k aggregate's
+    // Partial mode sits below the exchange that partitions on query_id
+    def partialTopK(p: SparkPlan) = p.exists {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.prettyName == "graft_top_k")
+      case _ => false
+    }
+    val below = phys.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("query_id") =>
+        partialTopK(e.child)
+    }
+    assert(below == Seq(true),
+      s"expected one query_id exchange over a partial graft_top_k, got $below:\n$plan")
   }
 
   test("quota sample compiles to WindowGroupLimit (per-task prune before the stratum shuffle)") {

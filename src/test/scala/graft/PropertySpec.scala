@@ -91,6 +91,11 @@ class PropertySpec extends SparkSpec {
         val scores = rs.sortBy(_.getInt(1)).map(_.getDouble(2))
         assert(scores.zip(scores.tail).forall { case (a, b) => a >= b }, "monotone")
       }
+      for (metric <- Seq("cosine", "dot"))
+        KnnReference.assertSameResult(
+          Knn.knnJoin(queries, points, "qid", "qv", "pid", "pv", k, metric),
+          KnnReference.knnJoin(queries, points, "qid", "qv", "pid", "pv", k, metric),
+          s"$metric k=$k")
     }
   }
 

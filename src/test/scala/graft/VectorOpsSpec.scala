@@ -43,6 +43,32 @@ class VectorOpsSpec extends SparkSpec {
     val got = Knn.knnJoin(queries, points, "qid", "qv", "pid", "pv", 5)
       .select("rank", "pid").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
     assert(got.toSeq == Seq((1, 10L), (2, 11L), (3, 12L)))
+
+    // adversarial inputs against the rank-window reference, whole result
+    // bit-exact: cosine ties (10/18 parallel), a NaN vector, null
+    // vectors, ±0.0 zero vectors, null ids (one tied with 19), a
+    // duplicate id with different vectors (17) and with identical rows
+    // (18), a zero, a NaN and a null query vector and a null query id
+    val nv = null.asInstanceOf[Array[Float]]
+    val advPoints = Seq[(java.lang.Long, Array[Float], String)](
+      (10L, Array(2.0f, 0.0f), "a"), (11L, Array(3.0f, 0.0f), "b"),
+      (12L, Array(0.0f, 1.0f), "c"), (13L, Array(Float.NaN, 1.0f), "nan"),
+      (14L, nv, "nullvec"), (null, Array(1.0f, 1.0f), "nullid"),
+      (15L, Array(-0.0f, -0.0f), "negzero"), (16L, Array(0.0f, 0.0f), "zero"),
+      (17L, Array(1.0f, -1.0f), "d1"), (17L, Array(-1.0f, 1.5f), "d2"),
+      (18L, Array(2.0f, 0.0f), "dup"), (18L, Array(2.0f, 0.0f), "dup"),
+      (19L, Array(1.0f, 1.0f), "e"), (20L, nv, "nullvec2"))
+      .toDF("pid", "pv", "tag")
+    val advQueries = Seq[(java.lang.Long, Array[Float])](
+      (1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)), (3L, Array(0.0f, 0.0f)),
+      (4L, nv), (5L, Array(-1.0f, 0.5f)), (6L, Array(Float.NaN, 0.0f)),
+      (null, Array(1.0f, 1.0f))).toDF("qid", "qv")
+    for (metric <- Seq("cosine", "dot"); k <- Seq(1, 2, 3, 5, 20);
+         (pts, label) <- Seq(advPoints -> "points", advPoints.filter(lit(false)) -> "no points"))
+      KnnReference.assertSameResult(
+        Knn.knnJoin(advQueries, pts, "qid", "qv", "pid", "pv", k, metric),
+        KnnReference.knnJoin(advQueries, pts, "qid", "qv", "pid", "pv", k, metric),
+        s"$metric k=$k $label")
   }
 
   test("top-k subset property: topK(k) is a prefix of topK(k+1)") {
