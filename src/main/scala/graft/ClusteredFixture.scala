@@ -44,12 +44,7 @@ object ClusteredFixture {
 
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/root/repo/data/fixtures/clustered_emb.parquet")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.defaultCpus, None)
     generate(spark, path)
     println(s"[fixture] wrote $path: " + spark.read.parquet(path).count() + " rows")
     spark.stop()

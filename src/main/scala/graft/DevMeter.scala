@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: noise-robust per-query cost attribution. Wall-clock on this
   * host swings up to 4x between identical runs (BASELINE.md), so A/B
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * identical across reps; min CPU is the least-interfered rep).
   *
   * Usage: runMain graft.DevMeter [reps=N] <query> [<query>...|all]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all cores).
   */
 object DevMeter {
 
@@ -46,31 +45,12 @@ object DevMeter {
     val (repArg, names0) = args.partition(_.startsWith("reps="))
     val reps = repArg.headOption.map(_.stripPrefix("reps=").toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.defaultCpus, Some(sfDir))
     val names =
       if (names0.isEmpty || names0.sameElements(Array("all")))
         SparkEntry.queries.keys.toSeq.sorted.sortBy(_.startsWith("stream_"))
       else names0.toSeq
-    // Bench-style warm-up + memo prewarm so reps measure serving.
-    Seq("q1_pricing", "v_knn_join", "q_events_hourly").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
-    try SparkEntryExt.prewarmMemos(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"prewarm failed: $e") }
+    GraftSession.warm(spark, sfDir)
     println("query,rep,wall_s,jobs,stages,tasks,cpu_s,run_s,shuf_read_mb,shuf_write_mb")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))

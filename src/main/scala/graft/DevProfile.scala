@@ -29,20 +29,7 @@ object DevProfile {
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val run = stages.getOrElse(stage,
       sys.error(s"unknown stage '$stage' — one of ${stages.keys.toSeq.sorted.mkString(", ")}"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // volume-sized AQE initial partitions, the RunQ discipline — the
-      // profiled stages run at big decades too
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, 32).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.defaultCpus, Some(sfDir))
     run(spark, sfDir)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named registry queries and show their output + timing —
   * `RunQ <name> [<name> ...]`; repeat a name to see warm-cache timing.
   * sfDir from SPARK_GRAFT_SF_DIR (default sf0.01).
@@ -10,29 +8,7 @@ object RunQ {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunQ <queryName> [<queryName> ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE is a dev override only (r18 history: the
-      // 1000x corpus' doc-x-bucket aggregates OOM'd at 32 fixed
-      // partitions). The load-bearing knob is now the volume-sized AQE
-      // initial partition number below: lazy library plans read the
-      // shuffle conf at execution time, so only an AQE-level initial
-      // count gives them split-safety without a per-query env var —
-      // exactly what a production job sets from its data volume.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        VolumeConf.initialPartitions(sfDir, cpus.toInt).toString)
-      // explicit coalesce target: the oversplit is merged back toward
-      // task-sized partitions, so small decades keep their task counts
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.defaultCpus, Some(sfDir))
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
       val t0 = System.nanoTime()

@@ -15,9 +15,11 @@ import graft.ops._
   */
 object SparkEntry {
 
+  /** The data dir [[entry]] reads. */
+  val EntrySfDir = "/root/testdata/sf0.001"
+
   /** Flagship query (reference §3.2 pipeline) on sf0.001; rows > 0. */
-  def entry(spark: SparkSession): DataFrame =
-    Rag.flagship(spark, "/root/testdata/sf0.001")
+  def entry(spark: SparkSession): DataFrame = Rag.flagship(spark, EntrySfDir)
 
   // DuckDB SQL fragments (vector math, portable hash, embed CTEs) are
   // shared with SparkEntryExt via the single-source [[OracleSql]].

@@ -651,7 +651,7 @@ object SparkEntryExt {
         s.sessionState.conf.numShufflePartitions)
       // Under AQE + partition coalescing, SQLConf.numShufflePartitions
       // reads `coalescePartitions.initialPartitionNum` whenever that
-      // key is SET — and the harness sessions (RunQ/Bench/Verify) set
+      // key is SET — and every GraftSession over a data dir sets
       // it volume-sized. Overriding only `spark.sql.shuffle.partitions`
       // would be silently shadowed there (today the two sizings share
       // VolumeConf over the same directory so the shadowing is
@@ -2226,8 +2226,9 @@ object SparkEntryExt {
       // partition), but the old per-path tails planned 4× (2 joins +
       // group-fold + mean aggregate) ≈ 16 extra sequential AQE stage
       // jobs for 80 rows of input.
-      val tagged = Seq("knn" -> knn5, "bm25" -> bm5, "rrf" -> rrf5,
+      val paths = Seq("knn" -> knn5, "bm25" -> bm5, "rrf" -> rrf5,
           "hybrid_mmr" -> mmr3)
+      val tagged = paths
         .map { case (n, h) => h.withColumn("method", lit(n)) }
         .reduce(_.unionByName(_))
       val withRel = tagged.join(qLab, "query_id").join(pLab, "point_id")
@@ -2237,14 +2238,14 @@ object SparkEntryExt {
         .withColumn("method", substring_index(col("query_id"), "|", 1))
         .groupBy(col("method"))
         .agg(count(lit(1)).as("n_queries"), round(avg(col("ndcg")), 6).as("mean_ndcg"))
-      // LEFT-join against the literal method list (the sim_recall_all
+      // LEFT-join against the method list (the sim_recall_all
       // fusion's discipline): the old per-method agg-without-groupBy
       // emitted one row per method even when a method had zero hit rows
       // (n_queries = 0, mean_ndcg null); a bare groupBy would silently
       // drop such methods. Identical output whenever every method has
       // hits — the case at every bench/verify scale.
       import s.implicits._
-      Seq("knn", "bm25", "rrf", "hybrid_mmr").toDF("method")
+      paths.map(_._1).toDF("method")
         .join(perMethod, Seq("method"), "left")
         .select(col("method"), coalesce(col("n_queries"), lit(0L)).as("n_queries"),
           col("mean_ndcg"))

@@ -208,8 +208,8 @@ object SparkEntryStream {
       EventStream.drainAll(spark, q, in)
     } finally q.stop()
     graft.ops.TextAnalysis.dataCardFromProfiles(
-      spark.read.parquet(s"$store/profile_batch_*"),
-      spark.read.parquet(s"$store/vocab_batch_*").distinct())
+      EventStream.readStore(spark, store, "profile_batch_*"),
+      EventStream.readStore(spark, store, "vocab_batch_*").distinct())
   }
 
   /** Shared CDC-drive skeleton for the upsert/delete stream runners:
@@ -294,8 +294,8 @@ object SparkEntryStream {
       queries.filter(col("vec_id") >= 5).write.mode("append").parquet(in)
       EventStream.drainAll(spark, q, in)
     } finally q.stop()
-    // one directory per micro-batch (idempotent replays) — glob them
-    spark.read.parquet(s"$store/batch_*")
+    // one directory per micro-batch (idempotent replays)
+    EventStream.readStore(spark, store, "batch_*")
       .select(col("query_id"), col("rank"), col("point_id"),
         round(col("score"), 6).as("score"))
       .orderBy(col("query_id"), col("rank"))
@@ -325,7 +325,7 @@ object SparkEntryStream {
       queries.filter(col("vec_id") >= 5).write.mode("append").parquet(in)
       EventStream.drainAll(spark, q, in)
     } finally q.stop()
-    spark.read.parquet(s"$store/batch_*")
+    EventStream.readStore(spark, store, "batch_*")
       .select(col("query_id"), col("rank"), col("point_id"),
         round(col("score"), 6).as("score"))
       .orderBy(col("query_id"), col("rank"))
@@ -365,7 +365,7 @@ object SparkEntryStream {
       docs.filter(col("doc_id") % (2 * m) =!= 0).write.mode("append").parquet(in)
       EventStream.drainAll(spark, q, in)
     } finally q.stop()
-    spark.read.parquet(s"$store/batch_*").orderBy(col("doc_id"))
+    EventStream.readStore(spark, store, "batch_*").orderBy(col("doc_id"))
   }
 
   /** Drive [[EventStream.novelDocsStream]]: stream ALL docs against a

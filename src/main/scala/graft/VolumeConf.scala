@@ -3,12 +3,11 @@ package graft
 /** ONE definition of volume-sized shuffle partitioning — the
   * arithmetic a production job does with its cluster's task size,
   * shared by the library's eager stored-table builds
-  * (`SparkEntryExt.withVocabSizedShuffle`) and the harness sessions'
-  * AQE config (RunQ/Bench/Verify set
-  * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` from
-  * it).
+  * (`SparkEntryExt.withVocabSizedShuffle`) and [[GraftSession]], which
+  * sets `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+  * from it for every session over a data dir.
   *
-  * Why the harness needs it: `spark.sql.shuffle.partitions` stays at
+  * Why sessions need it: `spark.sql.shuffle.partitions` stays at
   * the CPU count (right for row-keyed, doc_id-sized exchanges), but a
   * LAZY library plan with a corpus-sized key space — `dsirSelect`'s
   * doc×bucket cell aggregate (~1.3B groups at the 1000× decade), the
@@ -21,10 +20,8 @@ package graft
   * of the key space) while AQE's coalescer merges the small-decade
   * cost back down toward `advisoryPartitionSizeInBytes` — the
   * oversplit is paid only in shuffle-file count, never in task count,
-  * so sf0.01/sf0.1 suites keep their plans. This removed
-  * `SPARK_GRAFT_SHUFFLE` as a correctness-of-scale dependency
-  * (r18's SCALING.md records the seam it papered over); the env var
-  * remains as an explicit dev override only.
+  * so sf0.01/sf0.1 suites keep their plans. Shuffle width therefore
+  * needs no per-run setting at any decade.
   */
 object VolumeConf {
 
@@ -67,11 +64,8 @@ object VolumeConf {
     sizeOf(new java.io.File(s"$sfDir/documents.parquet"))
   }
 
-  /** The AQE initial partition number for a harness session over
-    * `sfDir`: volume-sized, floored at the session's parallelism and
-    * at any explicit `SPARK_GRAFT_SHUFFLE` dev override (the override
-    * must never be allowed to UNDER-split what the volume sizing
-    * would).
+  /** The AQE initial partition number for a session over `sfDir`:
+    * volume-sized, floored at the session's parallelism.
     */
   def initialPartitions(sfDir: String, cpus: Int): Int = {
     val bytes = docBytes(sfDir)
@@ -83,9 +77,8 @@ object VolumeConf {
     if (bytes == 0L)
       System.err.println(
         s"[graft] WARNING: volume probe read 0 bytes at $sfDir/documents.parquet" +
-          " — AQE initial partitions fall back to the CPU/env floor; at a big" +
+          " — AQE initial partitions fall back to the CPU floor; at a big" +
           " decade this under-splits wide-key aggregates (check the path)")
-    val explicit = sys.env.get("SPARK_GRAFT_SHUFFLE").flatMap(_.toIntOption)
-    volumeSizedPartitions(bytes, math.max(cpus, explicit.getOrElse(0)))
+    volumeSizedPartitions(bytes, cpus)
   }
 }

@@ -104,22 +104,18 @@ object EventStream {
     */
   private val RowsPerStatePartition = 250000L
 
-  /** Volume-sized state-partition count for a finite input dir:
-    * ⌈rows / [[RowsPerStatePartition]]⌉ from the parquet footers (a
-    * driver-side metadata read, the [[drainAll]] ledger source), later
-    * clamped to the session's shuffle parallelism by
-    * [[withStatePartitions]]. Same discipline as
-    * [[graft.VolumeConf]]: the count tracks stream VOLUME with the
+  /** Volume-sized state-partition count for a finite input of `rows`
+    * rows: ⌈rows / [[RowsPerStatePartition]]⌉, later clamped to the
+    * session's shuffle parallelism by [[withStatePartitions]]. Same
+    * discipline as [[graft.VolumeConf]]: the count tracks stream VOLUME with the
     * session width as the ceiling, instead of a constant tuned to
     * either the local core count or one fixture size — a production
     * deployment's volume pushes it up to the session's own
     * parallelism, a small fixture shrinks it to 1.
     */
-  private def statePartitionsFor(spark: SparkSession, inputDir: String): Int = {
-    val rows = parquetRowCount(spark, inputDir)
+  private def statePartitions(rows: Long): Int =
     math.max(1L, (rows + RowsPerStatePartition - 1) / RowsPerStatePartition)
       .min(Int.MaxValue.toLong).toInt
-  }
 
   /** Raise the progress-log retention to 10k entries. MUST run before
     * `start()`: StreamExecution clones the session at start, so a conf
@@ -133,33 +129,32 @@ object EventStream {
   private def ensureProgressRetention(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
 
-  /** Exact row count of the parquet data files DIRECTLY under `dir`,
-    * summed from the file footers on the driver — the same number
-    * `spark.read.parquet(dir).count()` computes, without launching a
-    * job. Used for the [[drainAll]] ingest ledger and
-    * [[statePartitionsFor]], whose inputs are finite flat fixture
-    * directories. NON-recursive deliberately, to match
-    * FileStreamSource's own listing: a nested subdirectory's files
-    * would inflate `expected` past what the source can ever ingest and
-    * turn every drain into a full-timeout loud failure.
+  /** Exact row count of the parquet data files under the flat input
+    * dir `dir`, summed from the file footers on the driver — the same
+    * number `spark.read.parquet(dir).count()` computes, without
+    * launching a job. It is the [[drainAll]] ingest ledger and sizes
+    * [[statePartitions]]. Nested input is refused: the ledger counts
+    * only top-level files, so a file in a subdirectory would either be
+    * ingested uncounted or counted but never ingested, and the drain
+    * would under-count silently or time out. Hidden entries (`_*`,
+    * `.*`) are skipped, as Spark's own listing skips them.
     */
   private def parquetRowCount(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, false)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
+    val visible = root.getFileSystem(conf).listStatus(root).toSeq.filter { f =>
       val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith(".")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try total += r.getRecordCount finally r.close()
-      }
+      !name.startsWith("_") && !name.startsWith(".")
     }
-    total
+    val nested = visible.filter(_.isDirectory).map(_.getPath.getName)
+    require(nested.isEmpty,
+      s"stream input $dir holds subdirectories (${nested.mkString(", ")}); " +
+        "stream inputs must be flat directories of parquet files")
+    visible.filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Drain `q` until every row currently in `inputDir` has been
@@ -177,7 +172,16 @@ object EventStream {
     * raises to 10k BEFORE starting its query ([[ensureProgressRetention]]).
     */
   def drainAll(spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
-      inputDir: String, timeoutSec: Int = 120): Unit = {
+      inputDir: String, timeoutSec: Int = DrainTimeoutSec): Unit =
+    drainTo(spark, q, inputDir, parquetRowCount(spark, inputDir), timeoutSec)
+
+  private val DrainTimeoutSec = 120
+
+  /** [[drainAll]] against an already-read ledger target of `expected`
+    * input rows.
+    */
+  private def drainTo(spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
+      inputDir: String, expected: Long, timeoutSec: Int): Unit = {
     // Retention must have been raised BEFORE q started (the query holds
     // a session clone — see [[ensureProgressRetention]], called by every
     // runner in this file pre-start). Setting it here would be too late;
@@ -186,11 +190,6 @@ object EventStream {
     require(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt >= 10000,
       "drainAll: progress retention not raised before query start — " +
         "the ledger could undercount; call ensureProgressRetention pre-start")
-    // Parquet footers already hold the exact row count, so the expected
-    // volume is a driver-side metadata read (a few ms), not a Spark
-    // count job — the old `spark.read.parquet(inputDir).count()` paid a
-    // full scheduler round-trip per drain, once per stream query.
-    val expected = parquetRowCount(spark, inputDir)
     def ingested: Long = q.recentProgress.iterator.map(_.numInputRows).sum
     q.processAllAvailable()
     val deadline = System.nanoTime() + timeoutSec * 1000000000L
@@ -202,28 +201,41 @@ object EventStream {
       s"stream drain timed out: ingested $ingested of $expected input rows from $inputDir")
   }
 
-  /** Drive the stateful sessionizer over a parquet dir, single batch,
-    * update-mode memory sink.
+  /** Drive the stateful streaming `plan` over the events in the finite
+    * parquet dir `inputDir` into the memory sink `queryName`,
+    * synchronously, and return the sink table. The footers are read
+    * once: their row count both sizes the state partitions and is the
+    * drain's ledger target.
     */
-  def runSessionsOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame = {
-    import spark.implicits._
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream.schema(eventSchema).parquet(inputDir)
-        // CONTRACT (shared with Relational.sessionize): session
-        // identity requires a non-null user key and a non-null event
-        // time — and the typed EvRow encoder holds a primitive Long
-        // user_id, so an unfiltered NULL would abort the stream with
-        // NOT_NULL_ASSERT_VIOLATION instead of degrading per row
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id")).as[EvRow]
-      val q = statefulSessionCounts(stream).writeStream
-        .outputMode("update")
+  private def runStateful(spark: SparkSession, inputDir: String, queryName: String,
+      outputMode: String)(plan: DataFrame => DataFrame): DataFrame = {
+    val rows = parquetRowCount(spark, inputDir)
+    withStatePartitions(spark, statePartitions(rows)) {
+      val q = plan(spark.readStream.schema(eventSchema).parquet(inputDir)).writeStream
+        .outputMode(outputMode)
         .format("memory")
         .queryName(queryName)
         .start()
-      try drainAll(spark, q, inputDir)
+      try drainTo(spark, q, inputDir, rows, DrainTimeoutSec)
       finally q.stop()
       spark.table(queryName)
+    }
+  }
+
+  /** The stateful sessionizer over a parquet dir, update-mode memory
+    * sink.
+    */
+  def runSessionsOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame = {
+    import spark.implicits._
+    runStateful(spark, inputDir, queryName, "update") { stream =>
+      // CONTRACT (shared with Relational.sessionize): session
+      // identity requires a non-null user key and a non-null event
+      // time — and the typed EvRow encoder holds a primitive Long
+      // user_id, so an unfiltered NULL would abort the stream with
+      // NOT_NULL_ASSERT_VIOLATION instead of degrading per row
+      statefulSessionCounts(stream
+        .filter(col("user_id").isNotNull && col("ts").isNotNull)
+        .select(col("event_id"), col("ts"), col("user_id")).as[EvRow]).toDF()
     }
   }
 
@@ -240,21 +252,10 @@ object EventStream {
   def dedupStream(events: DataFrame, delay: String, keyCols: Seq[String]): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark(keyCols)
 
-  /** Drive the streaming dedup over a parquet dir, single batch,
-    * append-mode memory sink.
-    */
+  /** The streaming dedup over a parquet dir, append-mode memory sink. */
   def runDedupOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream.schema(eventSchema).parquet(inputDir)
-      val q = dedupStream(stream, "1 hour", Seq("event_id")).writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
-    }
+    runStateful(spark, inputDir, queryName, "append")(
+      dedupStream(_, "1 hour", Seq("event_id")))
 
   /** Stream-stream interval join: each purchase matched to the same
     * user's clicks in the `interval` before it — click attribution, the
@@ -287,28 +288,20 @@ object EventStream {
         col("purchase_ts"), col("click_ts"))
   }
 
-  /** Drive the attribution join over a parquet dir (the two sides are
-    * event-type filters of the SAME staged source), single batch,
-    * append-mode memory sink.
+  /** The attribution join over a parquet dir (the two sides are
+    * event-type filters of the SAME staged source), append-mode memory
+    * sink.
     *
     * The join is the WORST case for state-partition fixed cost — FOUR
     * state stores per shuffle partition (two per side) — hence
     * [[withStatePartitions]]; see its note for the measurements.
     */
   def runJoinOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val ev = spark.readStream.schema(eventSchema).parquet(inputDir)
-      val q = attributionJoin(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase"),
-          delay = "1 hour", interval = "6 hours").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
+    runStateful(spark, inputDir, queryName, "append") { ev =>
+      attributionJoin(
+        ev.filter(col("event_type") === "click"),
+        ev.filter(col("event_type") === "purchase"),
+        delay = "1 hour", interval = "6 hours")
     }
 
   /** Ingest novelty filter: stream-STATIC anti-join — arriving docs
@@ -759,7 +752,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         batch.write.mode("overwrite").parquet(s"$storeDir/vec_batch_$batchId")
-        val streamed = spark.read.parquet(s"$storeDir/vec_batch_*")
+        val streamed = readStore(spark, storeDir, "vec_batch_*")
         val union = baseline.select(col("vec_id"), col("embedding"))
           .withColumn("__isb", lit(0))
           .unionByName(streamed.select(col("vec_id"), col("embedding"))
@@ -848,6 +841,16 @@ object EventStream {
       .map(_.toSeq).getOrElse(Seq.empty)
   }
 
+  /** The per-batch dirs matching `pattern` under `storeDir`, read as
+    * one table. The dirs are listed first ([[listStore]]) rather than
+    * passed as a glob path, whose literal metadata probe logs a benign
+    * but alarming stack trace.
+    */
+  private[graft] def readStore(spark: SparkSession, storeDir: String,
+      pattern: String): DataFrame =
+    spark.read.parquet(listStore(storeDir, pattern, spark.sparkContext.hadoopConfiguration)
+      .map(_.getPath.toString): _*)
+
   /** True iff `checkpointDir` is a COMMITTED streaming checkpoint —
     * at least one entry in its `offsets/` log. Only such a checkpoint
     * makes skipping the fresh-store guard safe: batch ids then resume
@@ -922,22 +925,9 @@ object EventStream {
     }
   }
 
-  /** Drive the streaming plan over a parquet directory with a memory
-    * sink, synchronously (for tests / local smoke): returns the final
-    * materialized result table.
+  /** The hourly aggregation over a parquet dir, complete-mode memory
+    * sink.
     */
   def runOnce(spark: SparkSession, inputDir: String, queryName: String): DataFrame =
-    withStatePartitions(spark, statePartitionsFor(spark, inputDir)) {
-      val stream = spark.readStream
-        .schema(eventSchema)
-        .parquet(inputDir)
-      val q = hourlyAgg(stream).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try drainAll(spark, q, inputDir)
-      finally q.stop()
-      spark.table(queryName)
-    }
+    runStateful(spark, inputDir, queryName, "complete")(hourlyAgg)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only audit (Test/runMain graft.AdversarialDeterminism): every
   * registry query — batch AND streaming — run TWICE over the
   * adversarial corpus at two different shuffle-partition counts,
@@ -19,24 +17,16 @@ import org.apache.spark.sql.SparkSession
   */
 object AdversarialDeterminism {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-adv-determinism")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-advdet-wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Base data dir: first CLI arg, then the runners' env contract,
     // then the container default — the dev audit should run on any
     // machine's data layout, like Verify/Bench/RunQ do.
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
-      .getOrElse("/root/testdata/sf0.001")
+      .getOrElse(SparkSpec.Sf0001)
+    val spark = GraftSession(4, Some(sfDir))
+    val widthKeys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val baseWidth = widthKeys.map(k => k -> spark.conf.get(k))
     val dir = AdversarialCorpusSpec.corpusDir(spark, sfDir)
     val all = SparkEntry.queries
     var bad = 0
@@ -44,14 +34,11 @@ object AdversarialDeterminism {
       try {
         def runAt(parts: String): Map[String, Int] = {
           // BOTH width keys, the withVocabSizedShuffle lesson: under
-          // AQE, coalescePartitions.initialPartitionNum (when set)
-          // shadows shuffle.partitions, so varying only the latter
-          // would silently stop varying the width if the AQE key ever
-          // reaches this session (e.g. copied harness conf) — the
-          // audit would report 0 divergences without auditing.
-          spark.conf.set("spark.sql.shuffle.partitions", parts)
-          spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", parts)
+          // AQE, coalescePartitions.initialPartitionNum (GraftSession
+          // sets it) shadows shuffle.partitions, so varying only the
+          // latter would not vary the width at all — the audit would
+          // report 0 divergences without auditing.
+          widthKeys.foreach(spark.conf.set(_, parts))
           // multiset of row renderings: order-insensitive compare, so
           // only CONTENT differences (not emission order) count
           fn(spark, dir).collect().iterator
@@ -71,7 +58,7 @@ object AdversarialDeterminism {
           bad += 1
           println(s"[advdet] ERROR $name: ${e.getClass.getSimpleName}: " +
             String.valueOf(e.getMessage).linesIterator.take(1).mkString.take(200))
-      } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+      } finally baseWidth.foreach { case (k, v) => spark.conf.set(k, v) }
     }
     println(s"[advdet] done: $bad of ${all.size} queries diverge across partition counts")
     spark.stop()

@@ -1082,6 +1082,21 @@ class OpsSpec extends SparkSpec {
       s"interval-join boundary semantics wrong: $got")
   }
 
+  test("streaming: a subdirectory under a stream input fails fast, naming the dir") {
+    val tmp = java.nio.file.Files.createTempDirectory("evnested").toString
+    val ev = Tables.events(spark, sf0001)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    ev.limit(100).write.mode("overwrite").parquet(tmp)
+    // the drain ledger counts top-level files only, so nested files
+    // would make it disagree with what the file source ingests
+    ev.limit(50).write.mode("overwrite").parquet(s"$tmp/part=x")
+    val e = intercept[IllegalArgumentException] {
+      EventStream.runSessionsOnce(spark, tmp, "sess_nested_test")
+    }
+    assert(e.getMessage.contains(tmp) && e.getMessage.contains("part=x"),
+      s"the error must name the input dir and its subdirectory: ${e.getMessage}")
+  }
+
   test("curation pipeline: verdict precedence across tiers") {
     val boiler = "shared boilerplate banner"
     def words(p: String) = (1 to 6).map(i => s"${p}word$i").mkString(" ")

@@ -426,4 +426,15 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("the shared test session carries the GraftSession conf at width 4") {
+    val c = SparkSpec.session.conf
+    assert(c.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      .contains(VolumeConf.initialPartitions(sf0001, 4).toString),
+      "AQE initial partition number must be volume-sized like every harness session")
+    assert(c.get("spark.sql.shuffle.partitions") == "4")
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "64m")
+  }
 }
